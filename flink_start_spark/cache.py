@@ -99,8 +99,7 @@ def memo_count(df: DataFrame) -> int:
     has already scanned is undefined behavior anyway). Keyed on the
     SparkContext applicationId (unique per context incarnation) so a
     stopped-and-recreated session (the vanilla gate) never reads a
-    stale entry; tests that rewrite a path in-place within one session
-    must call :func:`clear_count_memo`.
+    stale entry.
     """
     try:
         files = df.inputFiles()
@@ -121,7 +120,3 @@ def memo_count(df: DataFrame) -> int:
         _COUNT_MEMO[key] = df.count()
     return _COUNT_MEMO[key]
 
-
-def clear_count_memo() -> None:
-    """Drop every memoized count (for tests that mutate an input path)."""
-    _COUNT_MEMO.clear()

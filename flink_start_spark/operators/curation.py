@@ -92,23 +92,13 @@ def curation_audit(
     )
     # -- per-language exact lower median: two-phase histogram selection
     # (operators/selection.py) — no per-language sort task; the tiny
-    # median table broadcasts back onto the persisted flag base.
-    # Round-11: the median is a multiset function of (lang, score), so
-    # collapse the flag base to distinct-score counts first and run the
-    # WEIGHTED selection — one scan of the corpus-sized cache instead
-    # of three, and the topology's own cached projection shrinks to
-    # distinct-value size (guide §2.2).
+    # median table broadcasts back onto the persisted flag base, which
+    # the selection scans directly (it is already cached).
     # medians is consumed exactly once (broadcast join below): no
     # cache/checkpoint — an eager checkpoint A/B'd ~a job slower at
     # sf0.1 for lineage this short.
     medians = SEL.exact_rank_value(
-        base.groupBy(stratum_col, "quality_score").agg(
-            F.count(F.lit(1)).alias("_w")
-        ),
-        [stratum_col],
-        "quality_score",
-        out_col="median_quality",
-        weight_col="_w",
+        base, [stratum_col], "quality_score", out_col="median_quality"
     ).select(stratum_col, "median_quality")
     flagged = base.join(F.broadcast(medians), stratum_col)
     # -- decontamination: the one doc_id join (aggregated left side) ----

@@ -94,22 +94,8 @@ def _bjoin(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
     return left.join(F.broadcast(right), keys)
 
 
-def _wcount(weight_col: str | None) -> Column:
-    """The row-multiplicity aggregate: plain ``count(*)`` for row-level
-    inputs, ``sum(weight)`` for pre-grouped (value, multiplicity)
-    inputs. Ranks over the weighted relation are ranks over the
-    expanded multiset, so every downstream formula is unchanged."""
-    if weight_col is None:
-        return F.count(F.lit(1))
-    return F.sum(F.col(weight_col).cast("long"))
-
-
 def _bucketed(
-    slim: DataFrame,
-    keys: list[str],
-    value_col: str,
-    n_buckets: int,
-    weight_col: str | None = None,
+    slim: DataFrame, keys: list[str], value_col: str, n_buckets: int
 ) -> DataFrame:
     """Attach ``_bkt`` (monotone range bucket of ``value_col``) plus the
     per-key ``_vmin``/``_vmax``/``_gcnt`` stats used to derive it.
@@ -123,7 +109,7 @@ def _bucketed(
     stats = slim.groupBy(*keys).agg(
         F.min(value_col).alias("_vmin"),
         F.max(value_col).alias("_vmax"),
-        _wcount(weight_col).alias("_gcnt"),
+        F.count(F.lit(1)).alias("_gcnt"),
     )
     v = F.col(value_col)
     span = F.col("_vmax") - F.col("_vmin")
@@ -136,23 +122,26 @@ def _bucketed(
     return _bjoin(slim, stats, keys).withColumn("_bkt", bkt)
 
 
-def _prefix_targets(
-    d: DataFrame,
-    keys: list[str],
-    rank_fn: Callable[[Column], Column],
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Phase 1+2: per-key histogram, folded (no window) into the target
-    bucket for rank ``rank_fn(count)``.
-
-    Returns one tiny row per key: ``_gcnt`` (total), ``_r`` (1-based
-    target rank), ``_tbkt`` (bucket holding rank ``_r``) and
-    ``_cum_before`` (rows in earlier buckets).
-    """
-    hist = d.groupBy(*keys, "_bkt").agg(_wcount(weight_col).alias("_bc"))
-    arr = hist.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(F.struct("_bkt", "_bc"))).alias("_h")
+def _histogram(d: DataFrame, keys: list[str]) -> DataFrame:
+    """Phase 1: one row per key holding ``_h``, the per-bucket counts as
+    an ``array_sort``-ed array of ``(_bkt, _bc)`` structs, and their
+    total ``_gcnt``."""
+    hist = d.groupBy(*keys, "_bkt").agg(F.count(F.lit(1)).alias("_bc"))
+    return (
+        hist.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("_bkt", "_bc"))).alias("_h"))
+        .withColumn(
+            "_gcnt",
+            F.aggregate("_h", F.lit(0).cast("long"), lambda a, y: a + y["_bc"]),
+        )
     )
+
+
+def _locate_bucket(rank: Column) -> Column:
+    """Phase 2: fold the sorted histogram ``_h`` (no window) to the
+    bucket holding 1-based ``rank``. Returns a struct whose ``bkt`` is
+    that bucket and ``before`` the rows in earlier buckets. ``rank``
+    is re-evaluated per array element, so pass a column reference."""
     zero = F.struct(
         F.lit(False).alias("found"),
         F.lit(0).cast("long").alias("cum"),
@@ -161,7 +150,7 @@ def _prefix_targets(
     )
     step = lambda acc, y: F.when(acc["found"], acc).otherwise(  # noqa: E731
         F.when(
-            acc["cum"] + y["_bc"] >= F.col("_r"),
+            acc["cum"] + y["_bc"] >= rank,
             F.struct(
                 F.lit(True).alias("found"),
                 (acc["cum"] + y["_bc"]).alias("cum"),
@@ -177,11 +166,67 @@ def _prefix_targets(
             )
         )
     )
-    return (
-        arr.withColumn(
-            "_gcnt",
-            F.aggregate("_h", F.lit(0).cast("long"), lambda a, y: a + y["_bc"]),
+    return F.aggregate("_h", zero, step)
+
+
+def _value_histogram(
+    in_bucket: DataFrame, group: list[str], value_col: str
+) -> DataFrame:
+    """Phase 3 input: per ``group``, the ``array_sort``-ed distinct
+    values inside the target bucket with their counts, as ``_vh``."""
+    vc = in_bucket.groupBy(*group, value_col).agg(F.count(F.lit(1)).alias("_vc"))
+    return vc.groupBy(*group).agg(
+        F.array_sort(F.collect_list(F.struct(F.col(value_col), F.col("_vc")))).alias(
+            "_vh"
         )
+    )
+
+
+def _pick_value(local_rank: Column, value_col: str, value_type: str) -> Column:
+    """Phase 3: fold the sorted value histogram ``_vh`` to the value
+    whose cumulative count first reaches ``local_rank``. The accumulator
+    is typed from the ACTUAL value column — a hard-coded double would
+    silently coerce long/decimal inputs (wrong output type for the
+    oracle contract, and lossy past 2^53)."""
+    zero = F.struct(
+        F.lit(0).cast("long").alias("cum"),
+        F.lit(None).cast(value_type).alias("val"),
+    )
+    pick = lambda acc, y: F.when(acc["val"].isNotNull(), acc).otherwise(  # noqa: E731
+        F.when(
+            acc["cum"] + y["_vc"] >= local_rank,
+            F.struct(
+                (acc["cum"] + y["_vc"]).alias("cum"),
+                y[value_col].alias("val"),
+            ),
+        ).otherwise(
+            F.struct((acc["cum"] + y["_vc"]).alias("cum"), acc["val"].alias("val"))
+        )
+    )
+    return F.aggregate("_vh", zero, pick)["val"]
+
+
+def _slim(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """The narrow projection the topology scans 3x (stats, histogram,
+    resolve): persisted — unless the caller already persists the input,
+    in which case a second cache would just duplicate the
+    materialization pass (each scan re-reads the caller's cache)."""
+    slim = df.select(*keys, value_col)
+    return slim if df.is_cached else C.track(slim)
+
+
+def _prefix_targets(
+    d: DataFrame, keys: list[str], rank_fn: Callable[[Column], Column]
+) -> DataFrame:
+    """Phase 1+2: per-key histogram, folded into the target bucket for
+    rank ``rank_fn(count)``.
+
+    Returns one tiny row per key: ``_gcnt`` (total), ``_r`` (1-based
+    target rank), ``_tbkt`` (bucket holding rank ``_r``) and
+    ``_cum_before`` (rows in earlier buckets).
+    """
+    return (
+        _histogram(d, keys)
         # out-of-range ranks (caller-supplied rank_fn) would otherwise
         # silently resolve against the fold's initial bucket and return
         # a wrong/NULL value — fail the row loudly at runtime instead
@@ -203,7 +248,7 @@ def _prefix_targets(
                 ).cast("long")
             ),
         )
-        .withColumn("_t", F.aggregate("_h", zero, step))
+        .withColumn("_t", _locate_bucket(F.col("_r")))
         .select(
             *keys,
             "_gcnt",
@@ -221,7 +266,6 @@ def exact_rank_value(
     rank_fn: Callable[[Column], Column] | None = None,
     n_buckets: int = 1024,
     out_col: str = "_sel_value",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Per-key exact VALUE at rank ``rank_fn(count)`` under ascending
     value order — default the lower median, ``floor((cnt+1)/2)``.
@@ -232,31 +276,12 @@ def exact_rank_value(
     are interchangeable for value selection, so no tiebreak column is
     needed and NO per-key sort of rows ever happens — the heaviest step
     is a ``groupBy(keys, value)`` count inside one target bucket.
-
-    ``weight_col``: treat each input row as ``weight`` identical rows
-    (the caller pre-collapsed the corpus to per-(key, value) counts —
-    round-11 optimization: value selection only ever needs the distinct-
-    value multiset, so the corpus-sized relation never has to flow
-    through the topology at all). Every count becomes ``sum(weight)``;
-    ranks over the weighted relation equal ranks over the expanded
-    multiset row-for-row, so the selected value and ``_gcnt`` are
-    bit-identical to the unweighted call on the raw rows.
     """
     keys = list(keys)
     if rank_fn is None:
         rank_fn = lambda cnt: F.floor((cnt + F.lit(1)) / F.lit(2))  # noqa: E731
-    wcols = [weight_col] if weight_col else []
-    # the topology scans its input 3x (stats, histogram, resolve):
-    # persist the narrow projection — unless the caller already persists
-    # the input, in which case a second cache would just duplicate the
-    # materialization pass (each scan re-reads the caller's cache).
-    slim = (
-        df.select(*keys, value_col, *wcols)
-        if df.is_cached
-        else C.track(df.select(*keys, value_col, *wcols))
-    )
-    d = _bucketed(slim, keys, value_col, n_buckets, weight_col)
-    target = _prefix_targets(d, keys, rank_fn, weight_col)
+    d = _bucketed(_slim(df, keys, value_col), keys, value_col, n_buckets)
+    target = _prefix_targets(d, keys, rank_fn)
     # Phase 3: distinct-value counts inside the single target bucket,
     # folded to the value whose cumulative count crosses the local rank.
     # _lr is constant per key, so grouping by it is free and keeps it
@@ -266,34 +291,12 @@ def exact_rank_value(
         .filter(F.col("_bkt") == F.col("_tbkt"))
         .withColumn("_lr", F.col("_r") - F.col("_cum_before"))
     )
-    vc = in_bucket.groupBy(*keys, "_lr", value_col).agg(
-        _wcount(weight_col).alias("_vc")
-    )
-    vh = vc.groupBy(*keys, "_lr").agg(
-        F.array_sort(F.collect_list(F.struct(F.col(value_col), F.col("_vc")))).alias(
-            "_vh"
-        )
-    )
-    # accumulator 'val' typed from the ACTUAL value column — a
-    # hard-coded double would silently coerce long/decimal inputs
-    # (wrong output type for the oracle contract, and lossy past 2^53)
-    zero = F.struct(
-        F.lit(0).cast("long").alias("cum"),
-        F.lit(None).cast(dict(df.dtypes)[value_col]).alias("val"),
-    )
-    pick = lambda acc, y: F.when(acc["val"].isNotNull(), acc).otherwise(  # noqa: E731
-        F.when(
-            acc["cum"] + y["_vc"] >= F.col("_lr"),
-            F.struct(
-                (acc["cum"] + y["_vc"]).alias("cum"),
-                y[value_col].alias("val"),
-            ),
-        ).otherwise(
-            F.struct((acc["cum"] + y["_vc"]).alias("cum"), acc["val"].alias("val"))
-        )
-    )
+    vh = _value_histogram(in_bucket, [*keys, "_lr"], value_col)
     resolved = vh.select(
-        *keys, F.aggregate("_vh", zero, pick)["val"].alias(out_col)
+        *keys,
+        _pick_value(F.col("_lr"), value_col, dict(df.dtypes)[value_col]).alias(
+            out_col
+        ),
     )
     return _bjoin(target.select(*keys, "_gcnt"), resolved, keys)
 
@@ -305,7 +308,6 @@ def exact_quantile_values(
     probs: Sequence[float],
     n_buckets: int = 1024,
     out_col: str = "_q_value",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Per-key exact lower-quantile VALUES for several probabilities in
     ONE histogram pass — the multi-rank generalization of
@@ -318,39 +320,17 @@ def exact_quantile_values(
     per-key histogram and all in-bucket resolves share one filtered
     scan — cost is independent of ``len(probs)`` up to the (tiny)
     per-target fold work.
-
-    ``weight_col``: pre-grouped multiset input, exactly as in
-    :func:`exact_rank_value`.
     """
     keys = list(keys)
     probs = [float(p) for p in probs]
-    wcols = [weight_col] if weight_col else []
-    slim = (
-        df.select(*keys, value_col, *wcols)
-        if df.is_cached
-        else C.track(df.select(*keys, value_col, *wcols))
-    )
-    d = _bucketed(slim, keys, value_col, n_buckets, weight_col)
-    hist = d.groupBy(*keys, "_bkt").agg(_wcount(weight_col).alias("_bc"))
-    arr = hist.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(F.struct("_bkt", "_bc"))).alias("_h")
-    )
-    arr = arr.withColumn(
-        "_gcnt",
-        F.aggregate("_h", F.lit(0).cast("long"), lambda a, y: a + y["_bc"]),
-    )
+    d = _bucketed(_slim(df, keys, value_col), keys, value_col, n_buckets)
     # one target row per (key, probability) via a single explode — NOT
     # a per-prob union, which would re-evaluate the whole histogram
     # pipeline once per branch. rank = max(1, ceil(p * cnt)), located
-    # by the same found-flag fold as the single-rank path.
-    zero = F.struct(
-        F.lit(False).alias("found"),
-        F.lit(0).cast("long").alias("cum"),
-        F.lit(0).cast("int").alias("bkt"),
-        F.lit(0).cast("long").alias("before"),
-    )
+    # by the same fold as the single-rank path.
     targets = (
-        arr.select(
+        _histogram(d, keys)
+        .select(
             *keys,
             "_h",
             "_gcnt",
@@ -363,31 +343,7 @@ def exact_quantile_values(
                 F.ceil(F.col("_prob") * F.col("_gcnt")).cast("long"),
             ),
         )
-        .withColumn(
-            "_t",
-            F.aggregate(
-                "_h",
-                zero,
-                lambda acc, y: F.when(acc["found"], acc).otherwise(
-                    F.when(
-                        acc["cum"] + y["_bc"] >= F.col("_r"),
-                        F.struct(
-                            F.lit(True).alias("found"),
-                            (acc["cum"] + y["_bc"]).alias("cum"),
-                            y["_bkt"].alias("bkt"),
-                            acc["cum"].alias("before"),
-                        ),
-                    ).otherwise(
-                        F.struct(
-                            F.lit(False).alias("found"),
-                            (acc["cum"] + y["_bc"]).alias("cum"),
-                            acc["bkt"].alias("bkt"),
-                            acc["before"].alias("before"),
-                        )
-                    )
-                ),
-            ),
-        )
+        .withColumn("_t", _locate_bucket(F.col("_r")))
         .select(
             *keys,
             "_prob",
@@ -402,40 +358,19 @@ def exact_quantile_values(
     # folds the bucket's value histogram to its local rank.
     tb = targets.select(*keys, "_tbkt").distinct()
     in_bucket = _bjoin(d, tb.withColumnRenamed("_tbkt", "_bkt"), [*keys, "_bkt"])
-    vc = in_bucket.groupBy(*keys, "_bkt", value_col).agg(
-        _wcount(weight_col).alias("_vc")
-    )
-    vh = vc.groupBy(*keys, "_bkt").agg(
-        F.array_sort(F.collect_list(F.struct(F.col(value_col), F.col("_vc")))).alias(
-            "_vh"
-        )
-    )
+    vh = _value_histogram(in_bucket, [*keys, "_bkt"], value_col)
     joined = _bjoin(
         targets.withColumn("_lr", F.col("_r") - F.col("_cum_before")),
         vh.withColumnRenamed("_bkt", "_tbkt"),
         [*keys, "_tbkt"],
     )
-    # typed like exact_rank_value's accumulator — see comment there
-    zero_v = F.struct(
-        F.lit(0).cast("long").alias("cum"),
-        F.lit(None).cast(dict(df.dtypes)[value_col]).alias("val"),
-    )
-    pick = lambda acc, y: F.when(acc["val"].isNotNull(), acc).otherwise(  # noqa: E731
-        F.when(
-            acc["cum"] + y["_vc"] >= F.col("_lr"),
-            F.struct(
-                (acc["cum"] + y["_vc"]).alias("cum"),
-                y[value_col].alias("val"),
-            ),
-        ).otherwise(
-            F.struct((acc["cum"] + y["_vc"]).alias("cum"), acc["val"].alias("val"))
-        )
-    )
     return joined.select(
         *keys,
         "_prob",
         "_gcnt",
-        F.aggregate("_vh", zero_v, pick)["val"].alias(out_col),
+        _pick_value(F.col("_lr"), value_col, dict(df.dtypes)[value_col]).alias(
+            out_col
+        ),
     )
 
 

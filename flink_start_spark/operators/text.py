@@ -397,10 +397,6 @@ def quality_median_filter(
     from flink_start_spark.operators import selection as S
 
     st = C.track(text_stats(df, text_col, extra_cols=(group_col,)))
-    # Round-11: the weighted distinct-value collapse was A/B'd here and
-    # measured 1.25x SLOWER at sf0.1 (extra shuffle + aggregate, no row
-    # reduction on this corpus — see q_value_outliers_mad's note in
-    # plans/advanced.py); row-level kept.
     medians = S.exact_rank_value(
         st, [group_col], "quality_score", out_col="median_quality"
     ).select(group_col, "median_quality")

@@ -585,21 +585,6 @@ def q_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_start_spark import cache as C
     from flink_start_spark.operators import selection as S
 
-    # Round-11 NOTE (verdict item 4, measured and REJECTED): two
-    # candidate rewrites were built and paired-A/B'd against this form —
-    # (a) collapsing the corpus to groupBy(event_type, value) counts and
-    # running the WEIGHTED selection topology (selection.py weight_col)
-    # on the distinct-value multiset, and (b) the same plus eager
-    # localCheckpoints of the tiny med/mad relations to cut the
-    # 1396-line plan. Both lost at sf0.1: (b) 1.15x slower, (a) 1.23-
-    # 1.34x slower across two windows — the 2x distinct-value collapse
-    # (100k -> 49k) does not pay for the extra shuffle + hash aggregate
-    # + cache, and each eager checkpoint costs ~a job. The weighted
-    # machinery (kept, tested) is the right call when values are
-    # heavily quantized relative to corpus size (the 100 TB shape:
-    # collapse ratios of 10^3+, map-side partial agg's best case) —
-    # curation_audit ships it — but HERE row-level is the measured
-    # winner and this query keeps it.
     ev = load_table(spark, "events", sf_dir)
     base = C.track(ev.select("event_type", "value"))
     med = S.exact_rank_value(
@@ -670,9 +655,6 @@ def q_value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_start_spark import cache as C
     from flink_start_spark.operators import selection as S
 
-    # Round-11: the weighted distinct-value collapse was A/B'd here and
-    # measured 1.23x SLOWER at sf0.1 (see q_value_outliers_mad's note);
-    # row-level kept.
     ev = load_table(spark, "events", sf_dir)
     base = C.track(ev.select("event_type", "value"))
     qs = S.exact_quantile_values(

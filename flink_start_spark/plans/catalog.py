@@ -86,14 +86,6 @@ def money_sum(expr, alias: str):
     )
 
 
-def _epoch(col: str = "w") -> list:
-    """window struct → epoch-second BIGINT bounds (cross-engine stable)."""
-    return [
-        F.col(f"{col}.start").cast("long").alias("window_start"),
-        F.col(f"{col}.end").cast("long").alias("window_end"),
-    ]
-
-
 def floor_div_sql(n: str, m: int) -> str:
     """DuckDB SQL fragment for FLOOR division of integer expression
     ``n`` by positive literal ``m`` — the oracle twin of Spark's

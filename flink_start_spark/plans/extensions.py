@@ -2442,7 +2442,8 @@ def embedding_lsh_recall_audit_sql(
         "recall_ge90 isolates the design-point stratum (NULL when no "
         "ge-0.9 sample pairs exist, meaningful on planted/duplicate-"
         "bearing corpora like the fuzz lanes; its batch twin is the "
-        "planted-pair measurement in SIGN_LADDER_DEMO*.json)."
+        "planted-pair measurement recorded in COVERAGE.md and "
+        "SCALING.md)."
     ),
     tags=("similarity", "extension", "audit"),
 )

@@ -1224,9 +1224,6 @@ def q_quality_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_start_spark.operators import selection as S
 
     docs = fan_out(load_table(spark, "documents", sf_dir))
-    # Round-11: the weighted distinct-value collapse was A/B'd here and
-    # measured 1.14x SLOWER at sf0.1 (no row reduction on this corpus —
-    # see q_value_outliers_mad's note); row-level kept.
     q = docs.select(
         "lang",
         F.round(TX.quality_expr(TH.words(F.col("text"))), 6).alias(

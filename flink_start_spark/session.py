@@ -18,6 +18,27 @@ from pyspark.sql import SparkSession
 # Number of local cores to use; the driver runs us at local[32].
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+_MEMINFO = "/proc/meminfo"
+
+
+def _driver_mem() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    ``min(32g, half of the host's MemTotal)`` — a fixed 32g heap on a
+    smaller host invites the kernel OOM killer instead of a JVM spill.
+    Falls back to 32g where ``/proc/meminfo`` is unreadable."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB -> MB, halved
+                    return f"{min(32 * 1024, half_mb)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "32g"
+
 
 def get_spark(
     app_name: str = "flink_start_spark",
@@ -41,8 +62,9 @@ def get_spark(
     # SparkConf value is ignored once the gateway exists, so pass it via
     # PYSPARK_SUBMIT_ARGS for the first session in this process.
     if SparkSession.getActiveSession() is None and "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-        os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            f"--driver-memory {_driver_mem()} pyspark-shell"
+        )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

@@ -120,24 +120,6 @@ def encode_kafka_frame(
     return validate_kafka_frame(df.select(*cols))
 
 
-def kafka_sink(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    checkpoint_dir: str,
-    key_col: str | None = None,
-):
-    """Kafka streaming writer: rows serialized as JSON values through
-    :func:`encode_kafka_frame` (schema contract validated at build)."""
-    payload = encode_kafka_frame(df, key_col=key_col)
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def jdbc_reader(
     spark: SparkSession,
     url: str,

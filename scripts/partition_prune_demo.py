@@ -1,8 +1,8 @@
 """Measure the partition-pruning scan lever on a hive-partitioned fact
 table — the timing evidence behind tests/test_layout.py's plan
 assertions (which prove the PLAN shape; this script proves the lever
-actually moves wall-clock, like selection_scale_demo/skew_join_demo do
-for their levers).
+actually moves wall-clock, like skew_join_demo does for its lever; the
+exact-selection lever's crossover is recorded in COVERAGE.md).
 
     python scripts/partition_prune_demo.py [n_rows] [n_days]
 

@@ -13,35 +13,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def mem_probe() -> dict:
-    import numpy as np
-
-    nbytes = 256 * 1024 * 1024
-    src = np.ones(nbytes // 8, dtype=np.float64)
-    dst = np.ones_like(src)
-    warm_secs = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        np.copyto(dst, src)
-        warm_secs.append(time.perf_counter() - t0)
-    warm = (nbytes / 2**30) / max(min(warm_secs), 1e-9)
-    t0 = time.perf_counter()
-    fresh = np.empty_like(src)
-    np.copyto(fresh, src)
-    cold = (nbytes / 2**30) / max(time.perf_counter() - t0, 1e-9)
-    return {"warm_gbps": round(warm, 2), "cold_gbps": round(cold, 2)}
-
-
 def main() -> None:
-    out = mem_probe()
+    from bench import _mem_probe, _ruler
+
+    out = _mem_probe()
     out["load_avg_1m"] = round(os.getloadavg()[0], 2)
     if "--no-spark" not in sys.argv:
-        from bench import _ruler
         from flink_start_spark.session import get_spark
 
         spark = get_spark("ruler_probe")

@@ -76,7 +76,7 @@ def test_release_is_idempotent_and_safe_without_tracked(spark):
 def test_memo_count_hits_across_fresh_loads(spark):
     from flink_start_spark.sources.catalog import load_table
 
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
     a = load_table(spark, "embeddings", SF_DIR)
     b = load_table(spark, "embeddings", SF_DIR)  # new DataFrame, new expr ids
     n1 = cache.memo_count(a)
@@ -92,7 +92,7 @@ def test_memo_count_distinguishes_filters_and_paths(spark):
 
     from flink_start_spark.sources.catalog import load_table
 
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
     emb = load_table(spark, "embeddings", SF_DIR)
     half = emb.filter(F.col("vec_id") % 2 == 0)
     n_all = cache.memo_count(emb)
@@ -102,7 +102,7 @@ def test_memo_count_distinguishes_filters_and_paths(spark):
     docs = load_table(spark, "documents", SF_DIR)
     assert cache.memo_count(docs) == docs.count()
     assert len(cache._COUNT_MEMO) == 3
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
     assert len(cache._COUNT_MEMO) == 0
 
 
@@ -115,7 +115,7 @@ def test_memo_count_distinguishes_same_schema_paths(spark):
     scanned file list is now part of the memo key."""
     from flink_start_spark.sources.catalog import load_table
 
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
     small = load_table(spark, "embeddings", SF_DIR)
     # sf0.1 is the nearest SF where embeddings actually grows (2000
     # rows vs 500) — sf0.01 ties at 500 and couldn't catch the bug
@@ -126,17 +126,17 @@ def test_memo_count_distinguishes_same_schema_paths(spark):
     assert n_big == big.count()
     assert n_small != n_big  # distinct corpora, distinct memo entries
     assert len(cache._COUNT_MEMO) == 2
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
 
 
 def test_memo_count_never_memoizes_fileless_plans(spark):
     """In-memory frames (LocalRelation) also canonicalize schema-only;
     two distinct literal frames must not poison each other — file-less
     plans are counted directly, never memoized."""
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
     a = spark.createDataFrame([(i,) for i in range(5)], "vec_id long")
     b = spark.createDataFrame([(i,) for i in range(9)], "vec_id long")
     assert cache.memo_count(a) == 5
     assert cache.memo_count(b) == 9
     assert len(cache._COUNT_MEMO) == 0  # nothing memoized for either
-    cache.clear_count_memo()
+    cache._COUNT_MEMO.clear()
