@@ -20,9 +20,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F
+
 from flink_start_spark import cache
 from flink_start_spark.plans import QUERIES
-from flink_start_spark.session import get_spark
+from flink_start_spark.session import get_spark, warm_python_workers
+from flink_start_spark.streaming import (
+    count_trigger_stream,
+    drift_stream,
+    heavy_hitters_stream,
+    quantile_stream,
+    run_to_memory,
+    session_window_stream,
+    stream_events,
+)
 
 
 def _run_once(spark, name: str, sf_dir: str) -> float:
@@ -105,423 +116,60 @@ def _mem_probe() -> dict:
     return {"warm_gbps": round(warm, 2), "cold_gbps": round(cold, 2)}
 
 
-def _drop_view(spark, name: str) -> None:
-    """Memory-sink tables hold full result sets in driver memory; drop
-    them after timing or 3 runs x 4 streaming benches accumulate."""
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:  # noqa: BLE001  (best-effort cleanup)
-        pass
+def _load_avg():
+    """1-minute host load average (None where the OS has none)."""
+    return round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
 
 
-def _run_streaming(spark, sf_dir: str) -> float:
-    """End-to-end Structured Streaming run: watermarked tumbling signup
-    count over the events table via the file stream source → noop-like
-    memory sink, availableNow (the reference's core pipeline shape)."""
-    from pyspark.sql import functions as F
-
-    from flink_start_spark.streaming import run_to_memory, stream_events
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count(F.when(F.col("event_type") == "signup", 1)).alias("cnt"))
-    )
+def _run_streaming(spark, sf_dir: str, build, mode: str) -> float:
+    """Time one availableNow replay of the events fixture (file stream
+    source) through ``build`` into a memory sink. Memory-sink tables
+    hold full result sets in driver memory, so the table is dropped
+    after timing or 3 runs x 6 streaming benches accumulate."""
+    stream = build(stream_events(spark, os.path.join(sf_dir, "events.parquet")))
     t0 = time.perf_counter()
     sink = f"bench_stream_{int(t0 * 1000)}"
-    run_to_memory(agg, sink, "update")
+    run_to_memory(stream, sink, mode)
     dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
+    try:
+        spark.catalog.dropTempView(sink)
+    except Exception:  # noqa: BLE001  (best-effort cleanup)
+        pass
     return dt
 
 
-def _run_streaming_sessions(spark, sf_dir: str) -> float:
-    """Stateful streaming session windows (the reference's declared
-    future goal): per-user sessions with a 1-hour gap over the same
-    file stream — exercises Spark's session-state merge path."""
-    from flink_start_spark.streaming import run_to_memory, stream_events
-    from flink_start_spark.streaming.pipelines import session_window_stream
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    sessions = session_window_stream(stream, gap="1 hour", watermark="1 hour")
-    t0 = time.perf_counter()
-    sink = f"bench_sessions_{int(t0 * 1000)}"
-    run_to_memory(sessions, sink, "append")
-    dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
-    return dt
-
-
-def _run_streaming_quantiles(spark, sf_dir: str) -> float:
-    """Bounded-state running quantiles (streaming twin of the batch
-    two-phase selection): per-event_type p50/p90 via the permanent
-    histogram state operator."""
-    from flink_start_spark.streaming import run_to_memory, stream_events
-    from flink_start_spark.streaming.quantiles import quantile_stream
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    q = quantile_stream(
-        stream, "event_type", "value", probs=(0.5, 0.9), lo=0.0, hi=1100.0
-    )
-    t0 = time.perf_counter()
-    sink = f"bench_squant_{int(t0 * 1000)}"
-    run_to_memory(q, sink, "update")
-    dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
-    return dt
-
-
-def _run_streaming_drift(spark, sf_dir: str) -> float:
-    """Bounded-state PSI drift monitor (streaming twin of
-    feature_drift_psi): per-event_type running PSI against a uniform
-    reference over the same file stream."""
-    from flink_start_spark.streaming import run_to_memory, stream_events
-    from flink_start_spark.streaming.drift import drift_stream
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    d = drift_stream(stream, "event_type", "value", {}, lo=0.0, hi=600.0)
-    t0 = time.perf_counter()
-    sink = f"bench_sdrift_{int(t0 * 1000)}"
-    run_to_memory(d, sink, "update")
-    dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
-    return dt
-
-
-def _run_streaming_count_trigger(spark, sf_dir: str) -> float:
-    """Count-trigger FIRE-no-PURGE global window (streaming twin of the
-    reference's O13) via applyInPandasWithState, keyed by event_type —
-    the scalable production form (the non-keyed reference semantics
-    serialize all state through one task, exactly like Flink's
-    windowAll; parity tests pin that form)."""
-    from flink_start_spark.streaming import run_to_memory, stream_events
-    from flink_start_spark.streaming.count_trigger import count_trigger_stream
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    ct = count_trigger_stream(
-        stream, every=1000, pred_col="event_type", pred_value="purchase",
-        order_col="event_id", key_col="event_type",
-    )
-    t0 = time.perf_counter()
-    sink = f"bench_sct_{int(t0 * 1000)}"
-    run_to_memory(ct, sink, "append")
-    dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
-    return dt
-
-
-def _run_streaming_heavy_hitters(spark, sf_dir: str) -> float:
-    """Per-key running top-k frequent items (SpaceSaving summary in
-    applyInPandasWithState): top users per event_type over the same
-    file stream — the bounded-state frequent-items path."""
-    from flink_start_spark.streaming import run_to_memory, stream_events
-    from flink_start_spark.streaming.heavy_hitters import heavy_hitters_stream
-
-    stream = stream_events(spark, os.path.join(sf_dir, "events.parquet"))
-    hh = heavy_hitters_stream(stream, "event_type", "user_id", capacity=64, k=10)
-    t0 = time.perf_counter()
-    sink = f"bench_shh_{int(t0 * 1000)}"
-    run_to_memory(hh, sink, "update")
-    dt = time.perf_counter() - t0
-    _drop_view(spark, sink)
-    return dt
-
-
-#: all stateful streaming bench entries — every applyInPandasWithState
-#: path has a timing series (round-6 verdict item 5)
+#: (entry name, query over the stream_events source, output mode) — every
+#: stateful streaming path has a timing series
 STREAMING_BENCHES = (
-    ("streaming_tumbling_events", _run_streaming),
-    ("streaming_session_windows", _run_streaming_sessions),
-    ("streaming_quantiles", _run_streaming_quantiles),
-    ("streaming_drift", _run_streaming_drift),
-    ("streaming_count_trigger", _run_streaming_count_trigger),
-    ("streaming_heavy_hitters", _run_streaming_heavy_hitters),
+    # watermarked tumbling signup count (the reference's core pipeline)
+    ("streaming_tumbling_events", lambda ev: (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.when(F.col("event_type") == "signup", 1)).alias("cnt"))
+    ), "update"),
+    # per-user session windows: Spark's session-state merge path
+    ("streaming_session_windows", lambda ev: session_window_stream(
+        ev, gap="1 hour", watermark="1 hour",
+    ), "append"),
+    # per-event_type p50/p90 via the bounded histogram state operator
+    ("streaming_quantiles", lambda ev: quantile_stream(
+        ev, "event_type", "value", probs=(0.5, 0.9), lo=0.0, hi=1100.0,
+    ), "update"),
+    # per-event_type running PSI against a uniform reference
+    ("streaming_drift", lambda ev: drift_stream(
+        ev, "event_type", "value", {}, lo=0.0, hi=600.0,
+    ), "update"),
+    # count-trigger FIRE-no-PURGE global window, keyed by event_type
+    # (the scalable form; parity tests pin the non-keyed reference one)
+    ("streaming_count_trigger", lambda ev: count_trigger_stream(
+        ev, every=1000, pred_col="event_type", pred_value="purchase",
+        order_col="event_id", key_col="event_type",
+    ), "append"),
+    # per-event_type SpaceSaving top users
+    ("streaming_heavy_hitters", lambda ev: heavy_hitters_stream(
+        ev, "event_type", "user_id", capacity=64, k=10,
+    ), "update"),
 )
-
-
-# ---------------------------------------------------------------------------
-# Streaming steady-state throughput (rows/sec) — round-7 verdict item 6.
-# The micro-batch fixture benches above time END-TO-END latency of a
-# small availableNow replay; this mode answers the 100x-scale reviewer's
-# other question: how many events/sec does each stateful family sustain
-# in steady state? Rate source saturates the pipeline (batches grow
-# until processing speed = arrival speed, so processedRowsPerSecond IS
-# capacity, not input rate), RocksDB is the state backend (the cluster
-# configuration; parity vs the HDFS store is pinned by
-# tests/test_streaming_state_store.py), and the number reported is
-# sum(rows)/sum(trigger time) over the steady-state window (first
-# batches dropped — they measure codegen/state-store warm-up).
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _event_shape(src):
-    """Project a rate-style source (value, timestamp) onto the event
-    shape the streaming operators consume (same columns the parquet
-    fixtures carry): 7 activity values, 50k distinct users, values in
-    [0, 1100). Shared by the wall-clock rate benches here and the
-    rate-micro-batch capacity sweep (scripts/streaming_ceiling.py) so
-    the two measurements can never drift onto different event shapes."""
-    from pyspark.sql import functions as F
-
-    types = F.array(
-        *[
-            F.lit(t)
-            for t in (
-                "view", "click", "signup", "purchase", "login", "logout", "register",
-            )
-        ]
-    )
-    return src.select(
-        F.col("value").alias("event_id"),
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 50000).alias("user_id"),
-        F.element_at(types, (F.col("value") % 7 + 1).cast("int")).alias("activity"),
-        F.element_at(types, (F.col("value") % 7 + 1).cast("int")).alias("event_type"),
-        (F.col("value") % 1100).cast("double").alias("value"),
-    )
-
-
-def _rate_events(spark, rps: int):
-    """Wall-clock rate source in the shared event shape."""
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    src = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rps)
-        .option("numPartitions", parts)
-        .load()
-    )
-    return _event_shape(src)
-
-
-def _throughput_builders(spark, rps: int):
-    """name -> (streaming DataFrame or query-starter, output mode)."""
-    from flink_start_spark.streaming.count_trigger import count_trigger_stream
-    from flink_start_spark.streaming.drift import drift_stream
-    from flink_start_spark.streaming.heavy_hitters import heavy_hitters_stream
-    from flink_start_spark.streaming.pipelines import (
-        keyed_tumbling_counts_stream,
-        session_window_stream,
-        sliding_signup_counts_stream,
-        stream_dedup,
-        tumbling_signup_counts_stream,
-    )
-    from flink_start_spark.streaming.quantiles import quantile_stream
-
-    ev = lambda: _rate_events(spark, rps)  # noqa: E731
-    return {
-        "tumbling": (
-            lambda: tumbling_signup_counts_stream(
-                ev(), size="3 seconds", watermark="1 second",
-                pred_col="activity", pred_value="signup",
-            ),
-            "update",
-        ),
-        "keyed_tumbling": (
-            lambda: keyed_tumbling_counts_stream(
-                ev(), size="3 seconds", watermark="1 second", key_col="activity",
-            ),
-            "update",
-        ),
-        "sliding": (
-            lambda: sliding_signup_counts_stream(
-                ev(), size="3 seconds", slide="1 second", watermark="1 second",
-                pred_col="activity", pred_value="signup",
-            ),
-            "update",
-        ),
-        "session_windows": (
-            lambda: session_window_stream(
-                ev(), gap="2 seconds", watermark="1 second", key_col="user_id",
-            ),
-            "append",
-        ),
-        "dedup_within_watermark": (
-            lambda: stream_dedup(
-                ev(), ["user_id", "activity"], watermark="5 seconds",
-            ),
-            "append",
-        ),
-        "quantiles": (
-            lambda: quantile_stream(
-                ev(), "event_type", "value", probs=(0.5, 0.9), lo=0.0, hi=1100.0,
-            ),
-            "update",
-        ),
-        "drift_psi": (
-            lambda: drift_stream(
-                ev(), "event_type", "value", {}, lo=0.0, hi=1100.0,
-            ),
-            "update",
-        ),
-        "heavy_hitters": (
-            lambda: heavy_hitters_stream(
-                ev(), "event_type", "user_id", capacity=64, k=10,
-            ),
-            "update",
-        ),
-        "count_trigger": (
-            lambda: count_trigger_stream(
-                ev(), every=100000, pred_col="event_type", pred_value="purchase",
-                order_col="event_id", key_col="event_type",
-            ),
-            "append",
-        ),
-    }
-
-
-def _steady_state_rows_per_sec(progresses: list[dict], warmup_batches: int = 2):
-    """sum(rows)/sum(trigger seconds) over post-warm-up batches — the
-    batch-size-weighted mean, so one giant catch-up batch counts by its
-    duration, not once."""
-    usable = [
-        p
-        for p in progresses
-        if p.get("numInputRows", 0) > 0
-        and p.get("durationMs", {}).get("triggerExecution")
-    ]
-    # drop warm-up batches, but never drop ourselves to zero: a short
-    # run reports its best-available number instead of null
-    drop = min(warmup_batches, max(0, len(usable) - 1))
-    usable = usable[drop:]
-    rows = sum(p["numInputRows"] for p in usable)
-    secs = sum(p["durationMs"]["triggerExecution"] for p in usable) / 1000.0
-    if not secs:
-        return None, 0
-    return round(rows / secs, 1), len(usable)
-
-
-def _streaming_throughput_mode(spark, args) -> None:
-    """Measure steady-state rows/sec for every stateful streaming family
-    and write BENCH_STREAMING.json (embedded by the next full bench)."""
-    import tempfile
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    # python-worker warm-up (the pandas-state families reuse the pool)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    load_start = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
-    results: dict[str, dict] = {}
-
-    def _measure(name: str, q) -> None:
-        """ONE measurement protocol for every family (incl. upsert):
-        sleep the window, fail loudly if the query crashed mid-window
-        (a dead query's recentProgress residue would otherwise read as
-        a plausible steady-state number), else record the batch-size-
-        weighted steady-state rate."""
-        err = None
-        try:
-            time.sleep(args.stream_seconds)
-            exc = q.exception()
-            err = str(exc) if exc is not None else None
-            if err is None and not q.isActive:
-                # a JVM Error (e.g. StackOverflowError) kills the
-                # execution thread WITHOUT surfacing through
-                # q.exception() — the residue would read as a plausible
-                # steady-state number (observed once: regex
-                # StackOverflowError mid-window left 1 steady batch).
-                # Re-read exception() first: a NORMAL exception landing
-                # between the first read and the isActive check is
-                # recoverable and beats the generic message.
-                exc = q.exception()
-                err = (
-                    str(exc)
-                    if exc is not None
-                    else "query terminated mid-window with no recorded "
-                    "exception (JVM Error killed the execution thread)"
-                )
-            progresses = [json.loads(p.json) for p in q.recentProgress]
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-        if err is not None:
-            results[name] = {"rows_per_sec": None, "error": err[:400]}
-            print(json.dumps({"family": name, "error": err[:200]}),
-                  file=sys.stderr)
-            return
-        rps_meas, n_batches = _steady_state_rows_per_sec(progresses)
-        results[name] = {
-            "rows_per_sec": rps_meas,
-            "steady_batches": n_batches,
-            "input_bound": bool(
-                rps_meas is not None and rps_meas > 0.9 * args.rate_rps
-            ),
-        }
-        print(json.dumps({"family": name, **results[name]}), file=sys.stderr)
-
-    for name, (build, mode) in _throughput_builders(spark, args.rate_rps).items():
-        if args.queries and name not in args.queries:
-            continue
-        ckpt = tempfile.mkdtemp(prefix=f"sthr_{name}_")
-        q = (
-            build()
-            .writeStream.format("noop")
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _measure(name, q)
-    # upsert: foreachBatch latest-per-key parquet store (availableNow by
-    # design in streaming/upsert.py) — throughput-measured through the
-    # same merge on a processing-time trigger; the per-batch store
-    # rewrite is the operator's cost model, so it is IN the number.
-    # mirror the loop's truthiness: an EMPTY --queries list means "all
-    # families" there, so it must include upsert here too
-    if not args.queries or "upsert" in args.queries:
-        import tempfile
-
-        from flink_start_spark.streaming.upsert import latest_per_key
-
-        store_dir = tempfile.mkdtemp(prefix="sthr_upsert_store_")
-        store = os.path.join(store_dir, "store.parquet")
-        ckpt = tempfile.mkdtemp(prefix="sthr_upsert_ckpt_")
-
-        def _merge(batch, batch_id):
-            upd = latest_per_key(batch, ["user_id"], ["event_id"])
-            import glob as _glob
-            import os as _os
-            import shutil as _shutil
-
-            tmp = store + "._tmp"
-            if _os.path.exists(store) and _glob.glob(_os.path.join(store, "part-*")):
-                cur = spark.read.parquet(store).select(*upd.columns)
-                merged = latest_per_key(cur.unionByName(upd), ["user_id"], ["event_id"])
-            else:
-                merged = upd
-            merged.write.mode("overwrite").parquet(tmp)
-            if _os.path.exists(store):
-                _shutil.rmtree(store)
-            _os.rename(tmp, store)
-
-        q = (
-            _rate_events(spark, args.rate_rps)
-            .writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        _measure("upsert", q)
-    load_end = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
-    out = {
-        "metric": "streaming_steady_state_rows_per_sec",
-        "rate_rows_per_sec": args.rate_rps,
-        "seconds_per_family": args.stream_seconds,
-        "state_store": "rocksdb",
-        "load_avg_start": load_start,
-        "load_avg_end": load_end,
-        "families": results,
-    }
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), args.stream_out
-    )
-    with open(path, "w") as f:
-        json.dump(out, f)
-    print(json.dumps(out))
 
 
 #: superlinear-flag rule for --sf-pair: a query is flagged when its
@@ -559,7 +207,7 @@ def _pair_mode(spark, args) -> None:
         )
     data_ratio = sf_b / sf_a
     names = args.queries or list(QUERIES)
-    load_start = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
+    load_start = _load_avg()
     # warm up JVM/codegen + python worker pool once per SF dir; a
     # streaming-only --queries subset still needs the warm-up (the
     # first sample would otherwise absorb JVM/codegen/state-store
@@ -571,9 +219,7 @@ def _pair_mode(spark, args) -> None:
     if warm is not None:
         for d in (a_dir, b_dir):
             _run_once(spark, warm, d)
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_python_workers(spark)
 
     per_q: dict[str, dict] = {}
     _ruler(spark)  # untimed: the probe's own codegen/JIT warm-up
@@ -582,7 +228,7 @@ def _pair_mode(spark, args) -> None:
     def _mins(fn) -> float:
         return round(min(fn() for _ in range(args.runs)), 3)
 
-    streaming_map = dict(STREAMING_BENCHES)
+    streaming_map = {n: (b, m) for n, b, m in STREAMING_BENCHES}
     for name in names:
         if name in streaming_map:  # streaming entries are addressable too
             continue
@@ -592,12 +238,12 @@ def _pair_mode(spark, args) -> None:
     stream_names = (
         [n for n in names if n in streaming_map]
         if args.queries is not None
-        else [n for n, _ in STREAMING_BENCHES]
+        else list(streaming_map)
     )
     for sname in stream_names:
-        fn = streaming_map[sname]
-        t_a = _mins(lambda: fn(spark, a_dir))
-        t_b = _mins(lambda: fn(spark, b_dir))
+        build, mode = streaming_map[sname]
+        t_a = _mins(lambda: _run_streaming(spark, a_dir, build, mode))
+        t_b = _mins(lambda: _run_streaming(spark, b_dir, build, mode))
         per_q[sname] = {
             "t_a": t_a, "t_b": t_b, "ratio": round(t_b / max(t_a, 1e-6), 2)
         }
@@ -608,7 +254,7 @@ def _pair_mode(spark, args) -> None:
         if v["t_b"] > PAIR_FLOOR_SEC and v["ratio"] > threshold
     )
     ruler_after = _ruler(spark)
-    load_end = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
+    load_end = _load_avg()
     out = {
         "metric": "sf_pair_scaling",
         "sf_a": label_a,
@@ -645,7 +291,7 @@ def _pair_mode(spark, args) -> None:
     )
 
 
-def main() -> None:
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
@@ -664,20 +310,6 @@ def main() -> None:
         "full bench embeds both)",
     )
     ap.add_argument(
-        "--streaming-throughput",
-        action="store_true",
-        help="measure steady-state rows/sec per stateful streaming "
-        "family (rate source saturation, RocksDB state store) and "
-        "write BENCH_STREAMING.json; --queries limits families",
-    )
-    ap.add_argument("--rate-rps", type=int, default=400_000,
-                    help="rate-source rows/sec for --streaming-throughput "
-                    "(set above every family's capacity so batches grow "
-                    "until processedRowsPerSecond = capacity)")
-    ap.add_argument("--stream-seconds", type=int, default=30,
-                    help="wall seconds per family for --streaming-throughput")
-    ap.add_argument("--stream-out", default="BENCH_STREAMING.json")
-    ap.add_argument(
         "--out",
         default=None,
         help="artifact filename override. Default keeps the historical "
@@ -687,14 +319,14 @@ def main() -> None:
         "(which always writes BENCH_FULL.json) cannot clobber the "
         "quiet-window evidence (round-7 verdict item 3)",
     )
-    args = ap.parse_args()
+    return ap
+
+
+def main() -> None:
+    args = _parser().parse_args()
     if args.sf_pair:
         spark = get_spark("flink_start_spark_bench")
         _pair_mode(spark, args)
-        return
-    if args.streaming_throughput:
-        spark = get_spark("flink_start_spark_bench")
-        _streaming_throughput_mode(spark, args)
         return
 
     sf_label, _ = _sf_of(args.sf_dir)
@@ -703,19 +335,14 @@ def main() -> None:
     names = args.queries or list(QUERIES)
     # JVM/codegen warm-up on the flagship query (not timed)
     _run_once(spark, names[0], args.sf_dir)
-    # Python-worker pool warm-up: the 32 daemon workers spawn lazily on
-    # the first pandas UDF — that spawn is session infrastructure, not
-    # the cost of whichever pandas query happens to run first.
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_python_workers(spark)
 
     # Host-noise guard (round-3 verdict item: r2-vs-r3 artifacts were
     # incomparable because ~15 unchanged queries drifted 1.5-2x from
     # neighbor load): record the 1-min load average at start and warn
     # loudly when the box is already busy, so a noisy artifact is
     # labeled as such instead of read as a regression.
-    load_start = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
+    load_start = _load_avg()
     n_cpus = os.cpu_count() or 1
     if load_start is not None and load_start > 0.5 * n_cpus:
         print(
@@ -753,12 +380,15 @@ def main() -> None:
     for name in names:
         _record(name, [_run_once(spark, name, args.sf_dir) for _ in range(args.runs)])
     if args.queries is None:
-        for sname, fn in STREAMING_BENCHES:
-            _record(sname, [fn(spark, args.sf_dir) for _ in range(args.runs)])
+        for sname, build, mode in STREAMING_BENCHES:
+            _record(
+                sname,
+                [_run_streaming(spark, args.sf_dir, build, mode) for _ in range(args.runs)],
+            )
 
     total = round(sum(timings.values()), 3)
     ruler_after = _ruler(spark)
-    load_end = round(os.getloadavg()[0], 2) if hasattr(os, "getloadavg") else None
+    load_end = _load_avg()
     try:
         # label like 'sf0.1' -> 0.1; anything unparseable (multi-dot,
         # odd basename) stays a string instead of raising AFTER all the
@@ -807,7 +437,7 @@ def main() -> None:
                     pair = json.load(f)
                 if key == "streaming_throughput":
                     full[key] = {
-                        "rate_rows_per_sec": pair.get("rate_rows_per_sec"),
+                        "mode": pair.get("mode"),
                         "state_store": pair.get("state_store"),
                         "rows_per_sec": {
                             fam: v.get("rows_per_sec")

@@ -21,6 +21,11 @@ this is the difference between an 80 TB shuffle per join and none.
 
 from __future__ import annotations
 
+import glob as _glob
+import os as _os
+import shutil as _shutil
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -157,6 +162,31 @@ def write_partitioned(
     )
 
 
+@contextmanager
+def swap_rewrite(path: str, tag: str):
+    """Rewrite the directory ``path`` in place through a temp sibling and
+    a rename swap; yields the temp path the body must write.
+
+    On entry a crashed prior swap is repaired first: a failure between
+    the two renames leaves the only copy at ``<path>._<tag>_old``, so it
+    is renamed back to ``path`` BEFORE the stale ``._<tag>_tmp`` /
+    ``._<tag>_old`` siblings are removed (removing first would delete
+    the data). If the body raises, ``path`` is left untouched."""
+    base = path.rstrip("/")
+    tmp, old = f"{base}._{tag}_tmp", f"{base}._{tag}_old"
+    if not _os.path.exists(path) and _os.path.exists(old):
+        _os.rename(old, path)
+    for stale in (tmp, old):
+        if _os.path.exists(stale):
+            _shutil.rmtree(stale)
+    yield tmp
+    if _os.path.exists(path):
+        _os.rename(path, old)
+    _os.rename(tmp, path)
+    if _os.path.exists(old):
+        _shutil.rmtree(old)
+
+
 def compact_small_files(
     spark,
     path: str,
@@ -184,9 +214,8 @@ def compact_small_files(
     renames where ``path`` itself is absent (local-FS rename gives no
     two-directory atomic swap; concurrent readers should retry ENOENT,
     and a real lakehouse deployment would use a table format's commit
-    protocol instead). Stale ``._compact_tmp``/``._compact_old``
-    siblings from a crashed prior run are removed at entry so a retry
-    always succeeds.
+    protocol instead). A crashed prior run is repaired at entry
+    (``swap_rewrite``), so a retry always succeeds and loses no rows.
 
     Only FLAT directories are supported: a partitioned (nested
     key=value) layout would be silently flattened by the read-rewrite,
@@ -195,45 +224,34 @@ def compact_small_files(
     Returns ``{"files_before", "files_after", "bytes"}``. Content is
     preserved row-for-row (pinned by tests/test_layout.py).
     """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    for stale in (tmp, old):
-        if _os.path.exists(stale):
-            _shutil.rmtree(stale)
-    subdirs = [
-        d
-        for d in _glob.glob(_os.path.join(path, "*"))
-        if _os.path.isdir(d) and not _os.path.basename(d).startswith("_")
-    ]
-    if subdirs:
-        raise ValueError(
-            f"compact_small_files supports flat directories only; {path} "
-            f"contains partition-like subdirectories (e.g. {subdirs[0]}) "
-            "whose structure an in-place rewrite would flatten"
-        )
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(path, "*.parquet"))
-        + _glob.glob(_os.path.join(path, "part-*"))
-        if _os.path.isfile(f)
-    ]
-    total = sum(_os.path.getsize(f) for f in set(files))
-    n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    if sort_within_by:
-        df = df.repartitionByRange(n_out, *sort_within_by).sortWithinPartitions(
-            *sort_within_by
-        )
-    else:
-        df = df.repartition(n_out)
-    df.write.mode("overwrite").parquet(tmp)
-    _os.rename(path, old)
-    _os.rename(tmp, path)
-    _shutil.rmtree(old)
+    with swap_rewrite(path, "compact") as tmp:
+        subdirs = [
+            d
+            for d in _glob.glob(_os.path.join(path, "*"))
+            if _os.path.isdir(d) and not _os.path.basename(d).startswith("_")
+        ]
+        if subdirs:
+            raise ValueError(
+                f"compact_small_files supports flat directories only; {path} "
+                f"contains partition-like subdirectories (e.g. {subdirs[0]}) "
+                "whose structure an in-place rewrite would flatten"
+            )
+        files = [
+            f
+            for f in _glob.glob(_os.path.join(path, "*.parquet"))
+            + _glob.glob(_os.path.join(path, "part-*"))
+            if _os.path.isfile(f)
+        ]
+        total = sum(_os.path.getsize(f) for f in set(files))
+        n_out = max(1, -(-total // target_file_bytes))
+        df = spark.read.parquet(path)
+        if sort_within_by:
+            df = df.repartitionByRange(n_out, *sort_within_by).sortWithinPartitions(
+                *sort_within_by
+            )
+        else:
+            df = df.repartition(n_out)
+        df.write.mode("overwrite").parquet(tmp)
     after = len(
         [f for f in _glob.glob(_os.path.join(path, "part-*")) if _os.path.isfile(f)]
     )

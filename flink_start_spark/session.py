@@ -107,6 +107,16 @@ def get_spark(
     return spark
 
 
+def warm_python_workers(spark) -> None:
+    """Spawn the Python worker pool with one trivial pandas pass. The
+    daemon workers start lazily on the first pandas UDF; timing code
+    runs this first so that spawn is charged to session start, not to
+    whichever pandas query happens to run first."""
+    spark.range(64).repartition(32).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
 def stop_spark() -> None:
     """Stop the active session, if any (used by test teardown)."""
     active = SparkSession.getActiveSession()

@@ -6,8 +6,9 @@ never exercises (build.sbt:21-23); keyed upsert is what those sinks are
 FOR — maintain a latest-state-per-key table from an event stream. On
 Spark, the portable form is ``foreachBatch`` + a deterministic merge:
 each micro-batch is reduced to its latest row per key, merged against
-the current store, and the store is atomically swapped (same
-temp-sibling + rename discipline as ``operators/layout.py``).
+the current store, and the store is swapped in through a temp sibling
+and two renames, with crash recovery (``operators.layout.swap_rewrite``,
+shared with small-file compaction).
 
 Exactly-once: Structured Streaming may REPLAY a micro-batch after a
 failure (foreachBatch is at-least-once). The merge is idempotent by
@@ -29,12 +30,13 @@ from __future__ import annotations
 
 import glob as _glob
 import os as _os
-import shutil as _shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["latest_per_key", "upsert_parquet_sink"]
+from flink_start_spark.operators.layout import swap_rewrite
+
+__all__ = ["latest_per_key", "merge_batch", "upsert_parquet_sink"]
 
 
 def latest_per_key(
@@ -55,6 +57,23 @@ def latest_per_key(
     )
 
 
+def merge_batch(
+    batch: DataFrame, path: str, key_cols: list[str], order_cols: list[str]
+) -> None:
+    """Merge one micro-batch into the latest-row-per-key parquet store at
+    ``path`` (the ``foreachBatch`` body; idempotent under replay). A
+    crashed prior swap is restored BEFORE the store is read, or the
+    merge would silently restart from an empty store."""
+    with swap_rewrite(path, "upsert") as tmp:
+        upd = latest_per_key(batch, key_cols, order_cols)
+        if _os.path.exists(path) and _glob.glob(_os.path.join(path, "part-*")):
+            cur = batch.sparkSession.read.parquet(path).select(*upd.columns)
+            merged = latest_per_key(cur.unionByName(upd), key_cols, order_cols)
+        else:
+            merged = upd
+        merged.write.mode("overwrite").parquet(tmp)
+
+
 def upsert_parquet_sink(
     stream_df: DataFrame,
     path: str,
@@ -65,36 +84,10 @@ def upsert_parquet_sink(
     """Start an availableNow foreachBatch query that maintains a
     latest-row-per-key parquet store at ``path``. Returns the started
     StreamingQuery (caller awaits termination)."""
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        old = path.rstrip("/") + "._upsert_old"
-        # crash recovery: a failure between the two swap renames leaves
-        # the store only under ._upsert_old — restore it BEFORE reading,
-        # or the merge would silently restart from an empty store
-        if not _os.path.exists(path) and _os.path.exists(old):
-            _os.rename(old, path)
-        upd = latest_per_key(batch, key_cols, order_cols)
-        if _os.path.exists(path) and _glob.glob(_os.path.join(path, "part-*")):
-            cur = spark.read.parquet(path).select(*upd.columns)
-            merged = latest_per_key(
-                cur.unionByName(upd), key_cols, order_cols
-            )
-        else:
-            merged = upd
-        tmp = path.rstrip("/") + "._upsert_tmp"
-        for stale in (tmp, old):
-            if _os.path.exists(stale):
-                _shutil.rmtree(stale)
-        merged.write.mode("overwrite").parquet(tmp)
-        if _os.path.exists(path):
-            _os.rename(path, old)
-        _os.rename(tmp, path)
-        if _os.path.exists(old):
-            _shutil.rmtree(old)
-
     return (
-        stream_df.writeStream.foreachBatch(_merge)
+        stream_df.writeStream.foreachBatch(
+            lambda batch, _id: merge_batch(batch, path, key_cols, order_cols)
+        )
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

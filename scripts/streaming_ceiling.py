@@ -47,33 +47,91 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from flink_start_spark.streaming.count_trigger import count_trigger_stream  # noqa: E402
+from flink_start_spark.streaming.drift import drift_stream  # noqa: E402
+from flink_start_spark.streaming.heavy_hitters import heavy_hitters_stream  # noqa: E402
+from flink_start_spark.streaming.pipelines import (  # noqa: E402
+    keyed_tumbling_counts_stream,
+    session_window_stream,
+    sliding_signup_counts_stream,
+    stream_dedup,
+    tumbling_signup_counts_stream,
+)
+from flink_start_spark.streaming.quantiles import quantile_stream  # noqa: E402
+from flink_start_spark.streaming.upsert import merge_batch  # noqa: E402
+
+#: RocksDB is the state backend (the cluster configuration; parity vs
+#: the HDFS store is pinned by tests/test_streaming_state_store.py)
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
 #: families whose stateful stage is an Arrow-batched python worker
 PANDAS_FAMILIES = {"quantiles", "drift_psi", "heavy_hitters", "count_trigger"}
 
-FAMILIES = [
-    "passthrough",
-    "tumbling",
-    "keyed_tumbling",
-    "sliding",
-    "session_windows",
-    "dedup_within_watermark",
-    "quantiles",
-    "drift_psi",
-    "heavy_hitters",
-    "count_trigger",
-    "upsert",
-]
+
+def _noop(mode: str, build):
+    """A family that drains ``build(events)`` into the noop sink."""
+    return lambda ev, workdir: build(ev).writeStream.format("noop").outputMode(mode)
+
+
+def _upsert(ev, workdir: str):
+    """The shipped foreachBatch merge (streaming/upsert.py) on the
+    processing-time trigger; the per-batch store rewrite is the
+    operator's cost model, so it is IN the number."""
+    store = os.path.join(workdir, "store.parquet")
+    return ev.writeStream.foreachBatch(
+        lambda batch, _id: merge_batch(batch, store, ["user_id"], ["event_id"])
+    )
+
+
+#: family -> (events DataFrame, scratch dir) -> unstarted DataStreamWriter
+FAMILIES = {
+    "passthrough": _noop("append", lambda ev: ev),
+    "tumbling": _noop("update", lambda ev: tumbling_signup_counts_stream(
+        ev, size="3 seconds", watermark="1 second",
+        pred_col="activity", pred_value="signup",
+    )),
+    "keyed_tumbling": _noop("update", lambda ev: keyed_tumbling_counts_stream(
+        ev, size="3 seconds", watermark="1 second", key_col="activity",
+    )),
+    "sliding": _noop("update", lambda ev: sliding_signup_counts_stream(
+        ev, size="3 seconds", slide="1 second", watermark="1 second",
+        pred_col="activity", pred_value="signup",
+    )),
+    "session_windows": _noop("append", lambda ev: session_window_stream(
+        ev, gap="2 seconds", watermark="1 second", key_col="user_id",
+    )),
+    "dedup_within_watermark": _noop("append", lambda ev: stream_dedup(
+        ev, ["user_id", "activity"], watermark="5 seconds",
+    )),
+    "quantiles": _noop("update", lambda ev: quantile_stream(
+        ev, "event_type", "value", probs=(0.5, 0.9), lo=0.0, hi=1100.0,
+    )),
+    "drift_psi": _noop("update", lambda ev: drift_stream(
+        ev, "event_type", "value", {}, lo=0.0, hi=1100.0,
+    )),
+    "heavy_hitters": _noop("update", lambda ev: heavy_hitters_stream(
+        ev, "event_type", "user_id", capacity=64, k=10,
+    )),
+    "count_trigger": _noop("append", lambda ev: count_trigger_stream(
+        ev, every=100000, pred_col="event_type", pred_value="purchase",
+        order_col="event_id", key_col="event_type",
+    )),
+    "upsert": _upsert,
+}
 
 BATCH_SIZES = [2_000_000, 4_000_000, 8_000_000]
 
 
 def _mb_events(spark, rows_per_batch: int):
-    """rate-micro-batch source in bench._event_shape's shared event
-    projection — same columns as the wall-clock rate benches by
-    construction, but with a FIXED per-batch row count and event time
-    advancing 1 s per batch (bounded state, zero backlog)."""
-    import bench as B
-
+    """rate-micro-batch source (a FIXED per-batch row count, event time
+    advancing 1 s per batch: bounded state, zero backlog) projected onto
+    the event shape the streaming operators consume (same columns the
+    parquet fixtures carry): 7 activity values, 50k distinct users,
+    values in [0, 1100)."""
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     src = (
         spark.readStream.format("rate-micro-batch")
@@ -82,104 +140,85 @@ def _mb_events(spark, rows_per_batch: int):
         .option("numPartitions", parts)
         .load()
     )
-    return B._event_shape(src)
+    types = F.array(
+        *[
+            F.lit(t)
+            for t in (
+                "view", "click", "signup", "purchase", "login", "logout", "register",
+            )
+        ]
+    )
+    return src.select(
+        F.col("value").alias("event_id"),
+        F.col("timestamp").alias("ts"),
+        (F.col("value") % 50000).alias("user_id"),
+        F.element_at(types, (F.col("value") % 7 + 1).cast("int")).alias("activity"),
+        F.element_at(types, (F.col("value") % 7 + 1).cast("int")).alias("event_type"),
+        (F.col("value") % 1100).cast("double").alias("value"),
+    )
 
 
-def _build_query(spark, name: str, rows_per_batch: int):
+def _build_query(spark, name: str, rows_per_batch: int, workdir: str):
     """Start the family's streaming query against the micro-batch
-    source; returns the StreamingQuery."""
-    import bench as B
-
+    source, with its checkpoint (and any store) under ``workdir``;
+    returns the StreamingQuery."""
     ev = _mb_events(spark, rows_per_batch)
-    if name == "passthrough":
-        ckpt = tempfile.mkdtemp(prefix="sceil_pt_")
-        return (
-            ev.writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    if name == "upsert":
-        from flink_start_spark.streaming.upsert import latest_per_key
+    return (
+        FAMILIES[name](ev, workdir)
+        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
+        .start()
+    )
 
-        store_dir = tempfile.mkdtemp(prefix="sceil_upsert_store_")
-        store = os.path.join(store_dir, "store.parquet")
-        ckpt = tempfile.mkdtemp(prefix="sceil_upsert_ckpt_")
 
-        def _merge(batch, batch_id):
-            import glob as _glob
-            import os as _os
-            import shutil as _shutil
-
-            upd = latest_per_key(batch, ["user_id"], ["event_id"])
-            tmp = store + "._tmp"
-            if _os.path.exists(store) and _glob.glob(_os.path.join(store, "part-*")):
-                cur = spark.read.parquet(store).select(*upd.columns)
-                merged = latest_per_key(
-                    cur.unionByName(upd), ["user_id"], ["event_id"]
-                )
-            else:
-                merged = upd
-            merged.write.mode("overwrite").parquet(tmp)
-            if _os.path.exists(store):
-                _shutil.rmtree(store)
-            _os.rename(tmp, store)
-
-        return (
-            ev.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    # stateful families share bench.py's builders; monkey-patch the
-    # source factory so they read the micro-batch source instead of
-    # the wall-clock rate source
-    orig = B._rate_events
-    B._rate_events = lambda s, rps: _mb_events(s, rows_per_batch)
-    try:
-        build, mode = B._throughput_builders(spark, rows_per_batch)[name]
-        ckpt = tempfile.mkdtemp(prefix=f"sceil_{name}_")
-        return (
-            build()
-            .writeStream.format("noop")
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    finally:
-        B._rate_events = orig
+def _steady_state_rows_per_sec(progresses: list[dict], warmup_batches: int = 2):
+    """sum(rows)/sum(trigger seconds) over post-warm-up batches — the
+    batch-size-weighted mean, so one giant catch-up batch counts by its
+    duration, not once."""
+    usable = [
+        p
+        for p in progresses
+        if p.get("numInputRows", 0) > 0
+        and p.get("durationMs", {}).get("triggerExecution")
+    ]
+    # drop warm-up batches, but never drop ourselves to zero: a short
+    # run reports its best-available number instead of null
+    drop = min(warmup_batches, max(0, len(usable) - 1))
+    usable = usable[drop:]
+    rows = sum(p["numInputRows"] for p in usable)
+    secs = sum(p["durationMs"]["triggerExecution"] for p in usable) / 1000.0
+    if not secs:
+        return None, 0
+    return round(rows / secs, 1), len(usable)
 
 
 def _one(name: str, rows_per_batch: int, seconds: int) -> None:
     """Subprocess body: measure ONE family at one batch size and print
     a single JSON line."""
-    import bench as B
-    from flink_start_spark.session import get_spark
+    from flink_start_spark.session import get_spark, warm_python_workers
 
     spark = get_spark("streaming_ceiling")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", B.ROCKSDB_PROVIDER
-    )
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    warm_python_workers(spark)
 
-    q = _build_query(spark, name, rows_per_batch)
     err = None
-    try:
-        time.sleep(seconds)
-        exc = q.exception()
-        err = str(exc) if exc is not None else None
-        if err is None and not q.isActive:
+    # checkpoint and upsert store are scratch: removed with the query
+    with tempfile.TemporaryDirectory(prefix=f"sceil_{name}_") as workdir:
+        q = _build_query(spark, name, rows_per_batch, workdir)
+        try:
+            time.sleep(seconds)
             exc = q.exception()
-            err = str(exc) if exc is not None else "query died mid-window"
-        progresses = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        q.stop()
-        q.awaitTermination(60)
+            err = str(exc) if exc is not None else None
+            if err is None and not q.isActive:
+                exc = q.exception()
+                err = str(exc) if exc is not None else "query died mid-window"
+            progresses = [json.loads(p.json) for p in q.recentProgress]
+        finally:
+            q.stop()
+            q.awaitTermination(60)
     if err is not None:
         print(json.dumps({"rows_per_sec": None, "error": err[:400]}))
         return
-    rps, n = B._steady_state_rows_per_sec(progresses)
+    rps, n = _steady_state_rows_per_sec(progresses)
     durs = [
         p["durationMs"]["triggerExecution"] / 1000.0
         for p in progresses

@@ -141,6 +141,27 @@ def test_compact_small_files_preserves_content(spark, tmp_path):
     assert got == expected
 
 
+def test_compact_recovers_crashed_swap(spark, tmp_path):
+    """A crash between the two swap renames leaves the table only at
+    ._compact_old (plus a half-written ._compact_tmp); the retry must
+    restore it before cleaning the stale siblings, not delete it."""
+    import os
+
+    from flink_start_spark.operators.layout import compact_small_files
+
+    path = str(tmp_path / "store")
+    spark.range(0, 1000).repartition(8).write.parquet(path)
+    os.rename(path, path + "._compact_old")
+    os.mkdir(path + "._compact_tmp")  # the unpromoted rewrite
+
+    stats = compact_small_files(spark, path, target_file_bytes=1 << 30)
+    assert stats["files_after"] == 1
+    got = sorted(r["id"] for r in spark.read.parquet(path).collect())
+    assert got == list(range(1000))
+    assert not os.path.exists(path + "._compact_old")
+    assert not os.path.exists(path + "._compact_tmp")
+
+
 def test_compact_sort_within_restores_minmax_spans(spark, tmp_path):
     """sort_within_by re-clusters rows so per-file min/max spans shrink
     versus the shuffled layout (what makes skipping work again)."""

@@ -1,6 +1,7 @@
 """Scripts stay runnable and citable: the memcpy probe runs without
-Spark, and every ``scripts/<name>.py`` a source file, test, script, the
-README or the verify skill cites exists."""
+Spark, and every ``scripts/<name>.py`` and every ``bench.py --<flag>``
+a source file, test, script, the README or the verify skill cites
+exists."""
 
 from __future__ import annotations
 
@@ -47,3 +48,23 @@ def test_cited_scripts_exist():
             if not os.path.exists(os.path.join(REPO, "scripts", f"{name}.py")):
                 missing.append(f"{os.path.relpath(path, REPO)}: scripts/{name}.py")
     assert not missing, "cited scripts that do not exist:\n" + "\n".join(missing)
+
+
+def test_cited_bench_flags_exist():
+    sys.path.insert(0, REPO)
+    import bench
+
+    defined = {o for a in bench._parser()._actions for o in a.option_strings}
+    # `bench.py` then its arguments on the same line: every --flag counts
+    cite = re.compile(r"bench\.py((?:[ \t]+(?:--[\w-]+|[^\s`'\"-][^\s`'\"]*))*)")
+    missing = []
+    for path in _cited_files():
+        with open(path, encoding="utf-8", errors="replace") as f:
+            text = f.read()
+        for args in cite.findall(text):
+            for flag in re.findall(r"--[\w-]+", args):
+                if flag not in defined:
+                    missing.append(f"{os.path.relpath(path, REPO)}: bench.py {flag}")
+    assert not missing, "cited bench.py flags it does not define:\n" + "\n".join(
+        sorted(set(missing))
+    )
